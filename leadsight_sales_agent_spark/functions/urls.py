@@ -79,12 +79,12 @@ def resolve_links(links, base_col: str = "website", href_col: str = "href"):
     refs, scheme-less bases) pay the Arrow round trip. Fidelity is
     pinned by tests comparing the composite against urllib row-by-row.
 
-    Crossover note (measured at sf0.1, 3-run A/B): in the enrich
-    pipeline the branch + union adds ~3 s of stage overhead and LOSES
-    to the single UDF stage at ~90k links. This path pays off only when
-    per-row Python time exceeds that fixed overhead — link-heavy
-    corpora (≳10⁷ links per job); the enrich pipeline uses the direct
-    UDF and documents the trade.
+    Crossover note (measured at sf0.1, 3-run A/B): on the enrich
+    pipeline's ~90k links the branch + union added ~3 s of stage
+    overhead and LOST to a single UDF stage. This path pays off only
+    when per-row Python time exceeds that fixed overhead — link-heavy
+    corpora (≳10⁷ links per job). The enrich pipeline now resolves
+    hrefs with ``_resolve`` inside its crawl UDF, so it uses neither.
     """
     from pyspark.sql import functions as F
 

@@ -8,27 +8,33 @@ LLM 360° report → flatten to 14 fixed columns → rewrite output.xlsx.
 Here the same semantics become:
 
     companies
-      → fetch UDF (Arrow-batched, async-ready, mock transport by default)
-      → explode(links) → urljoin → same-domain SUBSTRING filter (P5)
-      → keyword score (A6) → score>0 (P6) → top-3 per company (T2 via window)
-      → dropDuplicates(url) (D1) → fetch subpages
-      → groupBy(company).agg(concat_ws(' ', collect_list(text)))  (F9)
+      → crawl UDF (Arrow-batched pandas_udf, one corpus per company row):
+          fetch homepages (batch) → anchor|href pairs (S5) → urljoin (F6)
+          → same-domain SUBSTRING filter (P5) → keyword score (A6)
+          → score>0 (P6) → top-3 (T2) → dedup after the cut (D1)
+          → fetch subpages (batch) → home text, then subpages in rank
+          order, joined with ' ' (F9)
       → whitespace-normalize (F4) → extract founded/email/about (F1-F3)
       → LLM UDF (U1, mock by default; graceful degradation U2)
-      → from_json + 9-key flatten, nested values re-serialized (F11-F12)
+      → get_json_object 9-key flatten, nested values re-serialized (F11-F12)
       → select(14 OUTPUT_COLUMNS)  (P1)
 
 The row-at-a-time loop disappears; per-row checkpointing (K2) becomes
 per-microbatch in the streaming twin (streaming/demo.py).
 
 Scale notes:
-- fetch/LLM are the only Python stages; both are Arrow-batched
-  ``pandas_udf``s with a pluggable transport so a real deployment swaps
-  in an async HTTP client (bounded concurrency per batch) without
-  touching the plan. Marked nondeterministic + persisted immediately so
-  lineage recomputation never re-crawls (SURVEY.md §4.3.2).
-- Everything between the two UDFs is built-in expressions: the link
-  explode/score/top-k runs JVM-side on the crawl output.
+- Two Python crossings per plan, crawl and LLM, both Arrow-batched
+  ``pandas_udf``s over a pluggable transport. Each Arrow batch fetches
+  all of its homepages as one batch, then all chosen subpages as one
+  batch, so a real deployment's async HTTP client (bounded concurrency
+  per batch) swaps in without touching the plan.
+- The crawl appears once in the plan and is marked nondeterministic,
+  so the optimizer never duplicates or re-runs it and it needs no
+  cache (SURVEY.md §4.3.2): nothing stays cached after a run.
+- Link scoring runs inside the crawl UDF (``top_links``): a company's
+  few links are cheaper to score in the worker that already holds its
+  page than to explode, window and re-group JVM-side, which cost
+  shuffles, extra stages and three more Python crossings per run.
 - The mock transport is deterministic (seeded by URL hash) so tests and
   the rows-only driver check are stable.
 """
@@ -38,7 +44,7 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -51,29 +57,12 @@ from leadsight_sales_agent_spark.functions.extracts import (
 )
 from leadsight_sales_agent_spark.functions.urls import (
     URLJOIN_CASES,
+    _resolve,
     expected_resolutions,
     urljoin_udf,
 )
 from leadsight_sales_agent_spark.registry import query
 from leadsight_sales_agent_spark.sources.catalog import load
-
-# Crawl frames persisted by enrich_pipeline, released on the next run.
-# The nondeterministic fetch UDF must be persisted (SURVEY §4.3.2), but
-# r1 never unpersisted it, leaking cached partitions into long-lived
-# sessions (one cached crawl per registry invocation). The pipeline
-# returns lazily, so the cache must outlive this call — instead each
-# run frees its predecessor's, bounding live caches at one.
-_CACHED_FRAMES: list[DataFrame] = []
-
-
-def release_caches() -> None:
-    """Unpersist crawl frames from prior enrich_pipeline runs."""
-    while _CACHED_FRAMES:
-        df = _CACHED_FRAMES.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
 
 # Reference output contract: exactly these 14 columns in this order
 # (SURVEY.md §2 says 15 — that is a miscount; the reference list below
@@ -104,6 +93,10 @@ LINK_KEYWORDS = [
     "about", "company", "corporate", "group", "leadership",
     "management", "investor", "who", "overview", "profile",
 ]
+
+# Page wire format of the transports: visible text, then the page's
+# anchor|href links joined by ";;".
+LINKS_SEP = "||LINKS||"
 
 # Cookie-consent keywords in PRIORITY order (reference app.py:39).
 COOKIE_KEYWORDS = ["accept", "agree", "allow all"]
@@ -164,7 +157,7 @@ def _mock_page(url: str) -> str:
         f"Partner|https://partner.example.net/{slug}",
         f"Investor Relations|/investor",
     ]
-    return " ".join(parts) + " ||LINKS|| " + ";;".join(links)
+    return " ".join(parts) + f" {LINKS_SEP} " + ";;".join(links)
 
 
 def _mock_llm(name: str, website: str, about: str) -> str | None:
@@ -206,22 +199,78 @@ def _real_transport_enabled() -> bool:
     return os.getenv(REAL_TRANSPORT_ENV, "") not in ("", "0", "false")
 
 
-@F.pandas_udf(StringType())
-def fetch_page_udf(urls: pd.Series) -> pd.Series:
-    """Arrow-batched page fetch (S3/S4): deterministic mock by default,
-    real bounded-concurrency HTTP via LEADSIGHT_REAL_TRANSPORT=1.
-    Either way a per-URL failure yields null (U3), never a task error."""
+def fetch_batch(urls: list) -> list[str | None]:
+    """The one page-fetch implementation (S3/S4): URLs → page bodies in
+    order. Deterministic mock by default, real bounded-concurrency HTTP
+    via LEADSIGHT_REAL_TRANSPORT=1. Either way a missing URL or a failed
+    fetch yields None (U3), never a task error."""
     if _real_transport_enabled():
         from leadsight_sales_agent_spark.functions.transport import HttpFetcher
 
-        return pd.Series(HttpFetcher().fetch_batch(list(urls)), dtype=object)
-    return urls.map(lambda u: _mock_page(u) if isinstance(u, str) and u else None)
+        return HttpFetcher().fetch_batch(urls)
+    return [_mock_page(u) if isinstance(u, str) and u else None for u in urls]
+
+
+def _page_text(page: str) -> str:
+    return page.split(LINKS_SEP)[0]
+
+
+def top_links(page: str | None, website: str | None, host: str | None) -> list[str]:
+    """The subpages the reference crawls from one homepage (app.py:146-193).
+
+    anchor|href pairs (S5) → drop empty hrefs (P4) → urljoin against the
+    website (F6), lowercased → keep URLs that contain ``host`` as a
+    substring (P5) → score +2 per keyword in the lowercased anchor, +3
+    per keyword in the URL (A6) → score > 0 (P6) → top 3 by score, ties
+    by URL ascending (T2) → duplicates dropped after the cut (D1), so
+    two links to one page leave fewer than three pages. Anchors and
+    hrefs are stripped of spaces only, as Spark's ``trim`` does."""
+    if page is None or host is None:
+        return []
+    parts = page.split(LINKS_SEP)
+    scored = []
+    for link in parts[1].split(";;") if len(parts) > 1 else ():
+        fields = link.split("|")
+        href = fields[1].strip(" ") if len(fields) > 1 else ""
+        url = _resolve(website, href) if href else None
+        if url is None or host not in (url := url.lower()):
+            continue
+        anchor = fields[0].strip(" ").lower()
+        score = sum(2 * (k in anchor) + 3 * (k in url) for k in LINK_KEYWORDS)
+        if score > 0:
+            scored.append((-score, url))
+    return list(dict.fromkeys(url for _, url in sorted(scored)[:3]))
+
+
+@F.pandas_udf(StringType())
+def crawl_udf(website: pd.Series, host: pd.Series) -> pd.Series:
+    """One company's crawl corpus per row: its homepage text, then its
+    top-3 subpages' texts in rank order, joined with ' ' (F9, the
+    reference's ``all_text += " " + sub_text``, app.py:141, 201). A
+    null homepage contributes nothing; a failed subpage contributes ''.
+    Homepages, then subpages, are fetched one batch per Arrow batch."""
+    sites = list(website)
+    homes = fetch_batch(sites)
+    chosen = [top_links(p, w, h) for p, w, h in zip(homes, sites, host)]
+    subs = iter(fetch_batch([u for urls in chosen for u in urls]))
+    out = []
+    for page, urls in zip(homes, chosen):
+        texts = [] if page is None else [_page_text(page)]
+        texts += [_page_text(next(subs) or "") for _ in urls]
+        out.append(" ".join(texts))
+    return pd.Series(out, dtype=object)
+
+
+@F.pandas_udf(StringType())
+def fetch_page_udf(urls: pd.Series) -> pd.Series:
+    """Arrow-batched page fetch, one batch per Arrow batch (fetch_batch)."""
+    return pd.Series(fetch_batch(list(urls)), dtype=object)
 
 
 @F.pandas_udf(StringType())
 def llm_enrich_udf(name: pd.Series, website: pd.Series, about: pd.Series) -> pd.Series:
     """Arrow-batched LLM enrichment (U1). Returns raw JSON string or
-    null (U2/U3). Real client opt-in as in fetch_page_udf."""
+    null (U2/U3). Real client opt-in as in fetch_batch."""
     client = None
     if _real_transport_enabled():
         from leadsight_sales_agent_spark.functions.transport import LLMClient
@@ -247,6 +296,7 @@ def llm_enrich_udf(name: pd.Series, website: pd.Series, about: pd.Series) -> pd.
     return pd.Series(out, dtype=object)
 
 
+crawl_udf = crawl_udf.asNondeterministic()
 fetch_page_udf = fetch_page_udf.asNondeterministic()
 llm_enrich_udf = llm_enrich_udf.asNondeterministic()
 
@@ -281,102 +331,16 @@ def enrich_pipeline(spark: SparkSession, companies: DataFrame) -> DataFrame:
     carries one (companies_frame / Excel ingest attach it), else by a
     best-effort ``monotonically_increasing_id`` snapshot of read order.
     """
-    release_caches()  # free the previous run's crawl cache
     if "_row_idx" not in companies.columns:
         companies = companies.withColumn("_row_idx", F.monotonically_increasing_id())
-    # -- homepage crawl (persist: nondeterministic UDF must not recompute)
-    home = companies.withColumn("page", fetch_page_udf(F.col("website"))).persist()
-    _CACHED_FRAMES.append(home)
-
-    body = F.split(F.col("page"), r"\|\|LINKS\|\|")
-    home_txt = home.select(
+    # -- crawl: the plan's one Python crossing before the LLM, one F9
+    # corpus per company row; the same-domain host is parsed JVM-side (F7)
+    website = F.col("website")
+    corpus = companies.select(
         "_row_idx",
         "company_name",
         "website",
-        F.get(body, 0).alias("text"),
-        F.get(body, 1).alias("links_raw"),  # F.get: null (not error) when absent
-    )
-
-    # -- link enumeration (S5): anchor|href pairs → explode
-    links = (
-        home_txt.select(
-            "_row_idx",
-            "company_name",
-            "website",
-            F.explode(F.split(F.coalesce("links_raw", F.lit("")), ";;")).alias("link"),
-        )
-        .select(
-            "_row_idx",
-            "company_name",
-            "website",
-            F.trim(F.get(F.split("link", r"\|"), 0)).alias("anchor"),
-            F.trim(F.get(F.split("link", r"\|"), 1)).alias("href"),
-        )
-        .filter(F.col("href").isNotNull() & (F.col("href") != ""))  # P4
-    )
-
-    # urljoin (F6): full urllib.parse.urljoin semantics (reference
-    # app.py:160) via the Arrow-batched UDF. Measured A/B at sf0.1
-    # (3 runs each, same session): this single UDF stage runs the
-    # pipeline in ~8.2 s vs ~11.0 s for the split JVM/UDF union of
-    # urls.py::resolve_links — branch + union stage overhead dominates
-    # at this link count. resolve_links remains the documented crossover
-    # path for link-heavy corpora where per-row Python, not stage
-    # count, is the bottleneck.
-    # asNondeterministic (r13, optimization-guide §4.4): the same-domain
-    # and score>0 filters reference the UDF-computed column, and the
-    # optimizer pushed a COPY of the whole ArrowEvalPython stage below
-    # the filter — every link row paid the Python round trip twice
-    # (two ArrowEvalPython nodes for one call in the r12 plan). The
-    # marker forbids the duplication; the resolver itself is pure, so
-    # results are unchanged.
-    full_url = urljoin_udf.asNondeterministic()(F.col("website"), F.col("href"))
-    # same-domain SUBSTRING containment (P5 — deliberately not host equality)
-    domain = url_host(F.col("website"))
-    scored = (
-        links.withColumn("full_url", F.lower(full_url))
-        .filter(F.col("full_url").contains(domain))
-        .withColumn("anchor_lc", F.lower(F.trim("anchor")))
-        .withColumn(
-            "score",
-            sum(
-                F.when(F.col("anchor_lc").contains(k), 2).otherwise(0)
-                + F.when(F.col("full_url").contains(k), 3).otherwise(0)
-                for k in LINK_KEYWORDS
-            ),
-        )
-        .filter(F.col("score") > 0)  # P6
-    )
-
-    # top-3 per company (T2) + visited-set dedup (D1)
-    w = Window.partitionBy("company_name").orderBy(F.desc("score"), F.asc("full_url"))
-    top_links = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .dropDuplicates(["company_name", "full_url"])
-    )
-
-    # -- subpage crawl + corpus assembly (F9). The subpage branch is
-    # referenced exactly once in the plan, so no persist: the fetch UDF
-    # runs once per action regardless. ``website`` rides along from
-    # top_links so no join-back is needed to reassemble the corpus key.
-    sub_txt = top_links.select(
-        "_row_idx",
-        "company_name",
-        "website",
-        F.get(
-            F.split(
-                F.coalesce(fetch_page_udf(F.col("full_url")), F.lit("")),
-                r"\|\|LINKS\|\|",
-            ),
-            0,
-        ).alias("text"),
-    )
-    corpus = (
-        home_txt.select("_row_idx", "company_name", "website", "text")
-        .unionByName(sub_txt)
-        .groupBy("_row_idx", "company_name", "website")
-        .agg(normalize_whitespace(F.concat_ws(" ", F.collect_list("text"))).alias("all_text"))
+        normalize_whitespace(crawl_udf(website, url_host(website))).alias("all_text"),
     )
 
     # -- regex extraction stage (F1-F3), cheap-before-expensive: runs
@@ -392,22 +356,17 @@ def enrich_pipeline(spark: SparkSession, companies: DataFrame) -> DataFrame:
     )
 
     # -- LLM enrichment (U1) + 9-key flatten (F12)
-    # single downstream reference → no persist needed (one compute/action)
     with_llm = extracted.withColumn(
         "llm_raw",
         llm_enrich_udf(F.col("company_name"), F.col("website"), F.coalesce("about", F.lit(""))),
     )
 
-    # from_json in PERMISSIVE mode: corrupt JSON → null struct (F11)
-    llm_schema = ", ".join(f"`{k}` STRING" for k in LLM_KEYS)
-    # parse each key as raw string first, then re-serialize dict/list
-    # values compactly like the reference (json.dumps, app.py:251-253):
-    # get_json_object returns compact JSON for nested values and the bare
-    # scalar for primitives — exactly the reference's flatten semantics.
+    # get_json_object yields null for corrupt JSON (F11), compact JSON
+    # for nested values and the bare scalar for primitives — exactly the
+    # reference's json.dumps flatten (app.py:251-253).
     flat_cols = [
         F.get_json_object("llm_raw", f"$.{k}").alias(k) for k in LLM_KEYS
     ]
-    assert llm_schema  # documented alternative: from_json(llm_raw, llm_schema)
 
     # T3: sink preserves input row order — sort on the input-order key,
     # then project it away (reference output.xlsx keeps sheet order).

@@ -28,6 +28,7 @@ import zipfile
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
@@ -143,14 +144,20 @@ def read_excel(
     header, data = read_excel_rows(path)
     if not header:
         raise ValueError(f"empty workbook: {path}")
-    out_rows = []
-    for i, r in enumerate(data):
-        vals = [None if v is None else str(v) for v in r]
-        out_rows.append(([i] if with_row_idx else []) + vals)
+    # A pandas frame goes to the JVM as Arrow batches; a list of rows
+    # would become a pickled Python RDD that a Python worker converts
+    # again on every scan.
+    pdf = pd.DataFrame(
+        [[None if v is None else str(v) for v in r] for r in data],
+        columns=header,
+        dtype=object,
+    )
+    if with_row_idx:
+        pdf.insert(0, "_row_idx", range(len(pdf)))
     cols = (["_row_idx BIGINT"] if with_row_idx else []) + [
         f"`{c}` STRING" for c in header
     ]
-    return spark.createDataFrame(out_rows, ", ".join(cols)).coalesce(1)
+    return spark.createDataFrame(pdf, ", ".join(cols)).coalesce(1)
 
 
 def validate_companies_contract(df: DataFrame) -> None:

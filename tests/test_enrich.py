@@ -5,8 +5,14 @@
 from __future__ import annotations
 
 import json
+import re
+from urllib.parse import urljoin, urlparse
+
+from pyspark.sql import functions as F
 
 from leadsight_sales_agent_spark.operators.enrich import (
+    LINK_KEYWORDS,
+    LINKS_SEP,
     LLM_KEYS,
     OUTPUT_COLUMNS,
     _mock_llm,
@@ -14,6 +20,7 @@ from leadsight_sales_agent_spark.operators.enrich import (
     companies_frame,
     enrich_pipeline,
     first_consent_button,
+    top_links,
 )
 
 
@@ -85,3 +92,200 @@ class TestPipelineShape:
         for o in overviews:
             parsed = json.loads(o)  # nested dict → compact JSON string (F12)
             assert parsed["name"]
+
+
+# -- the reference loop, one company at a time (app.py:141-256) --------------
+
+_FOUNDED = [
+    re.compile(p, re.IGNORECASE)
+    for p in (r"Founded (in )?(\d{4})", r"Established (in )?(\d{4})", r"Since (\d{4})")
+]
+_EMAIL = re.compile(r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]+")
+_ABOUT = re.compile(r"[^.]*about us[^.]*", re.IGNORECASE)
+
+
+def _text(url):
+    return _mock_page(url).split(LINKS_SEP)[0]
+
+
+def reference_subpages(website):
+    """Visited subpage URLs in visit order: score every same-domain link,
+    walk the top 3 and skip URLs already visited (app.py:146-193)."""
+    _, _, links = _mock_page(website).partition(LINKS_SEP)
+    domain = urlparse(website).netloc
+    candidates = []
+    for link in links.split(";;"):
+        anchor, _, href = link.partition("|")
+        href = href.strip(" ")
+        if not href:
+            continue
+        full_url = urljoin(website, href).lower()
+        if domain not in full_url:
+            continue
+        anchor = anchor.strip(" ").lower()
+        score = sum(2 for k in LINK_KEYWORDS if k in anchor)
+        score += sum(3 for k in LINK_KEYWORDS if k in full_url)
+        if score > 0:
+            candidates.append((full_url, score))
+    candidates.sort(key=lambda c: (-c[1], c[0]))
+    visited = []
+    for url, _ in candidates[:3]:
+        if url not in visited:
+            visited.append(url)
+    return visited
+
+
+def _flatten(raw):
+    try:
+        report = json.loads(raw) if raw is not None else None
+    except ValueError:
+        report = None
+    if not isinstance(report, dict):
+        return [None] * len(LLM_KEYS)
+    return [
+        v if v is None or isinstance(v, str)
+        else json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+        for v in (report.get(k) for k in LLM_KEYS)
+    ]
+
+
+def reference_row(name, website):
+    """The 14 cells the reference writes for one company: homepage text,
+    then ``all_text += " " + sub_text`` per visited subpage, whitespace
+    normalized, the three regex extracts, the LLM report flattened."""
+    all_text = _text(website)
+    for url in reference_subpages(website):
+        all_text += " " + _text(url)
+    all_text = re.sub(r"\s+", " ", all_text)
+    founded = next((m.group(0) for p in _FOUNDED if (m := p.search(all_text))), None)
+    email = m.group(0) if (m := _EMAIL.search(all_text)) else None
+    about = (m.group(0).strip() or None) if (m := _ABOUT.search(all_text)) else None
+    return [name, website, founded, about, *_flatten(_mock_llm(name, website, about or "")), email]
+
+
+def _home_and_sub_founded(website):
+    """(homepage year, a different subpage year) when both pages say
+    'Founded in', else None."""
+    home = re.search(r"Founded in (\d{4})", _text(website))
+    subs = [re.search(r"Founded in (\d{4})", _text(u)) for u in reference_subpages(website)]
+    other = [m.group(1) for m in subs if m and home and m.group(1) != home.group(1)]
+    return (home.group(1), other[0]) if other else None
+
+
+def generated_companies(n):
+    shapes = [
+        ("Company {i} Inc", "https://company-{i}.example.com"),
+        ("Nova {i} Labs", "https://nova{i}.example.org/"),
+        ("Delta Works {i}", "https://www.delta-works-{i}.test"),
+    ]
+    out = []
+    for i in range(n):
+        name, site = shapes[i % len(shapes)]
+        out.append((i, name.format(i=i), site.format(i=i)))
+    return out
+
+
+class TestReferenceOrder:
+    """The pipeline's 14 cells equal a row-at-a-time rendition of the
+    reference loop, whose corpus is the homepage first, then the top-3
+    subpages in rank order."""
+
+    def test_every_cell_matches_reference_loop(self, spark):
+        rows = generated_companies(240)
+        df = spark.createDataFrame(rows, "_row_idx BIGINT, company_name STRING, website STRING")
+        got = [list(r) for r in enrich_pipeline(spark, df).collect()]
+        want = [reference_row(name, site) for _, name, site in rows]
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            assert g == w, {c: (a, b) for c, a, b in zip(OUTPUT_COLUMNS, g, w) if a != b}
+        # the set must exercise both-pages-founded and the degraded LLM paths
+        assert any(_home_and_sub_founded(site) for _, _, site in rows)
+        assert any(all(r[k] is None for k in range(4, 13)) for r in got)
+
+    def test_homepage_founded_year_wins_over_subpage(self, spark):
+        name, site = next(
+            (name, site)
+            for _, name, site in generated_companies(240)
+            if _home_and_sub_founded(site)
+        )
+        home_year, sub_year = _home_and_sub_founded(site)
+        df = spark.createDataFrame([(name, site)], "company_name STRING, website STRING")
+        (row,) = enrich_pipeline(spark, df).collect()
+        assert row["Founded Info"] == f"Founded in {home_year}" != f"Founded in {sub_year}"
+
+
+class TestDuplicateRows:
+    def test_repeated_company_gives_identical_rows_in_sheet_order(self, spark):
+        acme = ("Acme Corp", "https://acme-corp.example.com")
+        other = ("Zeta Labs", "https://zeta-labs.example.com")
+        sheet = [acme, other, acme, acme]
+        df = spark.createDataFrame(
+            [(i, n, w) for i, (n, w) in enumerate(sheet)],
+            "_row_idx BIGINT, company_name STRING, website STRING",
+        )
+        got = [list(r) for r in enrich_pipeline(spark, df).collect()]
+        want = reference_row(*acme)
+        # About Us and Email come only from Acme's /about subpage, so every
+        # copy must have crawled its own top-3
+        assert want[3] is not None and want[13] is not None
+        assert [got[0], got[2], got[3]] == [want] * 3
+        assert got[1] == reference_row(*other)
+
+
+def _page(*links):
+    return "Home text. " + LINKS_SEP + " " + ";;".join(links)
+
+
+SITE, HOST = "https://acme.com", "acme.com"
+
+
+class TestLinkScorer:
+    """Edge semantics of top_links, the crawl's link pass."""
+
+    def test_spaces_are_stripped_but_tabs_are_not(self):
+        # ' ' strips to an empty href and is dropped; '\t' survives the
+        # strip, and urljoin then resolves it to the website itself
+        assert top_links(_page("About| ", "Company|\t"), SITE, HOST) == [SITE]
+        assert top_links(_page("About|  /about  "), SITE, HOST) == [SITE + "/about"]
+
+    def test_missing_or_empty_href_is_dropped(self):
+        assert top_links(_page("About", "About|", "About|   ", ""), SITE, HOST) == []
+        assert top_links("no links here", SITE, HOST) == []
+        assert top_links(None, SITE, HOST) == []
+
+    def test_duplicates_are_dropped_after_the_top3_cut(self):
+        page = _page(
+            "About|/about", "About|HTTPS://ACME.COM/about", "Group|/group", "Who|/who",
+        )
+        # /about twice, /group make the top 3; /who (4th) is never read
+        assert top_links(page, SITE, HOST) == [SITE + "/about", SITE + "/group"]
+
+    def test_score_ties_break_by_url_ascending(self):
+        page = _page("Profile|/profile", "Overview|/overview", "Group|/group", "Company|/company")
+        assert top_links(page, SITE, HOST) == [
+            SITE + "/company", SITE + "/group", SITE + "/overview",
+        ]
+        # a higher score outranks URL order
+        page = _page("Group|/group", "Investor about|/investor")
+        assert top_links(page, SITE, HOST) == [SITE + "/investor", SITE + "/group"]
+
+    def test_host_is_a_substring_match(self):
+        page = _page("About|https://notacme.com/about", "Team|https://partner.net/about")
+        assert top_links(page, SITE, HOST) == ["https://notacme.com/about"]
+        assert top_links(page, SITE, None) == []
+
+    def test_uppercase_hrefs_are_lowercased_and_scored(self):
+        page = _page("LEADERSHIP|/LEADERSHIP", "Careers|HTTPS://ACME.COM/ABOUT-US")
+        assert top_links(page, SITE, HOST) == [SITE + "/leadership", SITE + "/about-us"]
+
+    def test_zero_score_links_are_dropped(self):
+        assert top_links(_page("Careers|/careers", "Team|/team-3"), SITE, HOST) == []
+
+    def test_spark_lower_and_trim_agree_with_python(self, spark):
+        # the scorer used to run as Spark's lower/trim; str.lower and
+        # strip(" ") must give the same strings beyond ASCII
+        samples = ["  İstanbul ", "ΟΔΟΣ ΣΑΣ", "Straße ẞ", "\tAbout\t ", " \u00a0x "]
+        df = spark.createDataFrame([(v,) for v in samples], "s STRING")
+        for r in df.select("s", F.lower("s").alias("lo"), F.trim("s").alias("tr")).collect():
+            assert r["lo"] == r["s"].lower()
+            assert r["tr"] == r["s"].strip(" ")

@@ -7,6 +7,7 @@ from __future__ import annotations
 import zipfile
 
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from leadsight_sales_agent_spark.operators.enrich import OUTPUT_COLUMNS, enrich_pipeline
 from leadsight_sales_agent_spark.sources.excel import (
@@ -87,6 +88,49 @@ class TestContract:
         write_excel_rows(bad, ["company", "url"], [["A", "https://a.com"]])
         with pytest.raises(ValueError, match="company_name"):
             validate_companies_contract(read_excel(spark, bad))
+
+
+class TestArrowIngest:
+    """read_excel builds its frame from pandas through Arrow; the frame
+    must be what the row-list ingest gave: ``_row_idx BIGINT`` then every
+    column as nullable STRING, cells as ``str(v)``, blanks as null."""
+
+    HEADER = ["name", "n", "ratio", "flag", "empty"]
+    ROWS = [
+        ["Acme & Söhne", 42, 2.5, True, None],
+        ["新世界", -1, 0.125, False, None],
+        [None, 7, None, None, None],
+    ]
+
+    @staticmethod
+    def row_list_schema(header, with_row_idx=True):
+        fields = [StructField("_row_idx", LongType(), True)] if with_row_idx else []
+        return StructType(fields + [StructField(c, StringType(), True) for c in header])
+
+    def test_header_only_sheet_gives_zero_rows(self, spark, tmp_path):
+        path = str(tmp_path / "header_only.xlsx")
+        write_excel_rows(path, ["company_name", "website"], [])
+        df = read_excel(spark, path)
+        assert df.schema == self.row_list_schema(["company_name", "website"])
+        assert df.count() == 0
+
+    def test_cells_keep_str_text_and_blanks_stay_null(self, spark, tmp_path):
+        path = str(tmp_path / "mixed.xlsx")
+        write_excel_rows(path, self.HEADER, self.ROWS)
+        got = [list(r) for r in read_excel(spark, path).collect()]
+        assert got == [
+            [0, "Acme & Söhne", "42", "2.5", "True", None],
+            [1, "新世界", "-1", "0.125", "False", None],
+            [2, None, "7", None, None, None],
+        ]
+
+    def test_schema_equals_row_list_schema(self, spark, tmp_path):
+        path = str(tmp_path / "mixed.xlsx")
+        write_excel_rows(path, self.HEADER, self.ROWS)
+        assert read_excel(spark, path).schema == self.row_list_schema(self.HEADER)
+        plain = read_excel(spark, path, with_row_idx=False)
+        assert plain.schema == self.row_list_schema(self.HEADER, with_row_idx=False)
+        assert plain.collect()[0]["n"] == "42"
 
 
 class TestEndToEndContract:

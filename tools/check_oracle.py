@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 import time
 from datetime import date, datetime
@@ -109,6 +110,26 @@ def type_class(spark_dtype: str, duck_type: str):
     return sc, dc
 
 
+# A DuckDB memory_limit value as this tool accepts it: 256MiB, 2GB, 1.5 GiB.
+MEMORY_LIMIT_RE = r"(\d+(?:\.\d+)?)\s*([KMGT])(i?)B"
+# Per-query floor for an oracle that runs out of memory in replay mode.
+REPLAY_OOM_FLOOR = "2GiB"
+
+
+def memory_limit_bytes(limit: str) -> float:
+    """Bytes in a memory_limit matching MEMORY_LIMIT_RE (KiB = 1024 B,
+    KB = 1000 B, as DuckDB reads them)."""
+    num, unit, binary = re.fullmatch(MEMORY_LIMIT_RE, limit.strip()).groups()
+    return float(num) * (1024 if binary else 1000) ** ("KMGT".index(unit) + 1)
+
+
+def replay_retry_limit(limit: str) -> str:
+    """The limit an OOM-ing oracle is re-run at: the configured limit or
+    the 2 GiB floor, whichever is larger, so a user-set limit above the
+    floor is never lowered."""
+    return max(limit.strip(), REPLAY_OOM_FLOOR, key=memory_limit_bytes)
+
+
 def main() -> int:
     args = sys.argv[1:]
     # --driver-replay (r13, verdict task 4): replay the DRIVER's
@@ -147,9 +168,7 @@ def main() -> int:
         # r13 (advisor): validate before interpolating into SET — a
         # malformed value must fail with a clear message, not a
         # confusing SQL error from a stray quote.
-        import re as _re
-
-        if not _re.fullmatch(r"\d+(\.\d+)?\s*[KMGT]i?B", mem_limit.strip()):
+        if not re.fullmatch(MEMORY_LIMIT_RE, mem_limit.strip()):
             print(
                 "check_oracle: invalid SPARK_GRAFT_DUCKDB_MEMORY_LIMIT "
                 f"{mem_limit!r} (expected e.g. 256MiB / 2GB)"
@@ -223,15 +242,17 @@ def main() -> int:
             # OutOfMemory in replay mode, retry that ONE query at a
             # 2 GiB floor and restore the cap, so the replay gate
             # covers all 486 oracles while every query that CAN run
-            # under the cap still exercises the spilling paths.
+            # under the cap still exercises the spilling paths. A
+            # configured limit above the floor is kept, not lowered.
             retried = False
             if (
                 driver_replay
                 and mem_limit
                 and "memory" in str(ex).lower()
             ):
+                retry_limit = replay_retry_limit(mem_limit)
                 try:
-                    con.execute("SET memory_limit='2GiB'")
+                    con.execute(f"SET memory_limit='{retry_limit}'")
                     rel = con.sql(oracles[name])
                     ocols = list(rel.columns)
                     otypes = [str(t) for t in rel.types]
@@ -239,7 +260,7 @@ def main() -> int:
                     retried = True
                     print(
                         f"note  {name}: oracle OOM under {mem_limit}; "
-                        "re-ran at the 2GiB per-query floor"
+                        f"re-ran at {retry_limit} (2GiB per-query floor)"
                     )
                 except Exception as ex2:  # noqa: BLE001
                     ex = ex2
